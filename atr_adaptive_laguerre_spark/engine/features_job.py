@@ -1,28 +1,36 @@
 """Feature-extraction jobs: doc-grain token table -> per-step features.
 
-Two physical strategies, one logical result:
+Every batch feature job runs through ONE physical path, the private
+driver :func:`_map_kernel`:
 
-* :func:`core_features_long` — **zero-shuffle scan path** for doc-grain
-  input (the ``input_hint`` shape: one row per entity holding the whole
-  ``tokens`` array).  Each entity already arrives complete in one row, so
-  ``mapInPandas`` computes the sequential recurrence without any exchange;
-  parallelism and load balance come from Parquet file splits
-  (bytes ∝ tokens ∝ kernel work).  At 100 TB this is the plan you want:
-  scan -> Python/Arrow kernel -> write, no wide dependency at all.
+    doc-grain Arrow batches -> :func:`_arrow_doc_chunks` (padding-efficient
+    chunks, the single null-token check) -> a compute function -> an
+    emitter -> :func:`_overlap_chunks` (compute on a helper thread,
+    double-buffered output pools) -> one ``mapInArrow``.
 
-* :func:`core_features_from_long` — **salted applyInPandas path** for
-  long-form input (one row per token: entity spread over rows).  Rows are
-  hash/range-partitioned by the salted entity key, grouped, sorted by
-  ``offset`` *inside* the kernel (Spark does not guarantee group order),
-  and run through the same batched kernel.  One intended shuffle.
+* Compute functions: :func:`_core_cols` (the core recurrence outputs) or
+  :func:`_chunk_feature_cols` (the 43 / 169 / 121-column matrix).
+* Emitters (output shapes): long (one row per entity x offset), doc (one
+  row per entity with array columns, empty docs included) or checksum
+  (per-chunk row count, NaN count and column sums).
 
-Both paths call the identical lockstep kernel
-(:mod:`atr_adaptive_laguerre_spark.kernel.batched`), so their outputs are
-bit-identical to each other and to the local oracle.
+The public jobs — :func:`core_features_long`, :func:`features_long`,
+:func:`features_doc`, :func:`features_checksum` — are thin wrappers that
+pick a compute function and an emitter.  Doc-grain input (the
+``input_hint`` shape: one row per entity holding the whole ``tokens``
+array) needs no exchange: each entity arrives complete in one row, and
+parallelism comes from Parquet file splits (bytes ∝ tokens ∝ kernel
+work).
+
+Long-form input (one row per token) is first turned back into doc grain
+by :func:`implode_tokens`, a Catalyst-only salted range partition plus
+``collect_list`` — one intended shuffle, no Python grouping code — and
+then runs through the same driver, so every path calls the identical
+lockstep kernel (:mod:`atr_adaptive_laguerre_spark.kernel.batched`) and
+is bit-identical to the local oracle.
 
 Reference lifecycle being re-expressed: ``fit_transform`` ->
-``_compute_core_loop`` (``/root/reference/src/atr_adaptive_laguerre/features/
-atr_adaptive_rsi.py:300-453``).
+``_compute_core_loop`` (reference ``features/atr_adaptive_rsi.py``).
 """
 
 from __future__ import annotations
@@ -30,14 +38,16 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, functions as F
 
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import tokens_to_ohlcv_batched
-from atr_adaptive_laguerre_spark.engine.partitioning import repartition_by_entity
-from atr_adaptive_laguerre_spark.kernel.batched import (
-    core_loop_batched, pad_sequences,
+from atr_adaptive_laguerre_spark.engine.partitioning import salted_entity_key
+from atr_adaptive_laguerre_spark.kernel.batched import core_loop_batched
+from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
+    _flat_explode_idx,
 )
 from atr_adaptive_laguerre_spark.kernel.reference_impl import CORE_OUTPUTS
 
@@ -45,15 +55,10 @@ from atr_adaptive_laguerre_spark.kernel.reference_impl import CORE_OUTPUTS
 #: Python worker's peak memory independent of Arrow batch sizing.
 CELL_BUDGET = 262_144
 
-CORE_LONG_SCHEMA = (
-    "source string, doc_id string, offset int, token int, "
-    + ", ".join(f"{c} double" for c in CORE_OUTPUTS)
-)
-
-CORE_DOC_SCHEMA = (
-    "source string, doc_id string, n_tok int, tokens array<int>, "
-    "rsi array<double>"
-)
+#: seconds :func:`_overlap_chunks` waits for its producer thread to exit
+#: after stop; a producer still alive after that raises instead of
+#: racing the next task on the shared kernel buffers.
+_PRODUCER_JOIN_S = 60.0
 
 
 def _length_chunks(lengths: np.ndarray, cell_budget: int) -> Iterator[np.ndarray]:
@@ -87,9 +92,10 @@ def _length_chunks(lengths: np.ndarray, cell_budget: int) -> Iterator[np.ndarray
 
 def _chunk_feature_cols(mat, lens, cfg: FeatureConfig, pool=None):
     """OHLCV derivation + kernel dispatch for one padded chunk — the ONE
-    definition every chunked path (pandas, mapInArrow long/doc/checksum)
-    shares, so availability gating and kernel dispatch cannot drift
-    between them."""
+    definition of the feature matrix every output shape shares, so
+    availability gating and kernel dispatch cannot drift between them.
+    Returns long-form 1-D arrays (docs in chunk order); with ``pool``
+    they are pooled buffers, else fresh arrays."""
     from atr_adaptive_laguerre_spark.data.corpus import (
         tokens_to_availability_batched,
     )
@@ -106,194 +112,17 @@ def _chunk_feature_cols(mat, lens, cfg: FeatureConfig, pool=None):
     return single_interval_long(high, low, close, lens, cfg, pool=pool)
 
 
-def _require_no_null_tokens_pandas(pdf: pd.DataFrame) -> None:
-    """A NULL tokens array is a contract violation (empty docs must be
-    [], not NULL) — fail loud with the doc named instead of letting
-    numpy throw an opaque conversion error deep in the kernel."""
-    null_mask = pdf["tokens"].isna()
-    if null_mask.any():
-        bad = pdf["doc_id"][null_mask].iloc[0]
-        raise ValueError(
-            f"null tokens array for doc_id {bad!r} "
-            f"({int(null_mask.sum())} such rows in this batch); "
-            f"empty documents must carry [] not NULL")
-
-
-def _kernel_on_docs(pdf: pd.DataFrame, cfg: FeatureConfig,
-                    long_form: bool, cell_budget: int = CELL_BUDGET,
-                    ) -> Iterator[pd.DataFrame]:
-    """Run the batched kernel over a pandas batch of doc rows."""
-    if len(pdf) == 0:
-        return
-    _require_no_null_tokens_pandas(pdf)
-    toks = [np.asarray(t, dtype=np.int32) for t in pdf["tokens"]]
-    lengths = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                          count=len(toks))
-    for idx in _length_chunks(lengths, cell_budget):
-        chunk_toks = [toks[i] for i in idx]
-        mat, lens = pad_sequences(chunk_toks, dtype=np.int64)
-        high, low, close = tokens_to_ohlcv_batched(mat)
-        out = core_loop_batched(high, low, close,
-                                cfg.atr_period, cfg.adaptive_offset)
-        src = pdf["source"].to_numpy()[idx]
-        did = pdf["doc_id"].to_numpy()[idx]
-        if long_form:
-            # explode: one output row per (entity, offset)
-            reps = lens
-            flat_mask_cols = {}
-            for k in CORE_OUTPUTS:
-                m = out[k]
-                flat_mask_cols[k] = np.concatenate(
-                    [m[b, : reps[b]] for b in range(len(idx))])
-            offsets = np.concatenate(
-                [np.arange(n, dtype=np.int32) for n in reps])
-            yield pd.DataFrame({
-                "source": np.repeat(src, reps),
-                "doc_id": np.repeat(did, reps),
-                "offset": offsets,
-                # token pass-through straight from the input arrays
-                "token": np.concatenate(chunk_toks),
-                **flat_mask_cols,
-            })
-        else:
-            yield pd.DataFrame({
-                "source": src,
-                "doc_id": did,
-                "n_tok": lens.astype(np.int32),
-                # pass the original arrays through untouched
-                "tokens": pd.Series(chunk_toks, dtype=object),
-                "rsi": pd.Series(
-                    [out["rsi"][b, : lens[b]] for b in range(len(idx))],
-                    dtype=object),
-            })
-    if not long_form:
-        # the chunker skips n_tok==0 entities (no feature rows in long
-        # form by definition), but the doc grain contracts ONE row per
-        # entity — emit empty docs with empty arrays so they don't
-        # silently vanish from the output
-        empty = np.flatnonzero(lengths == 0)
-        if len(empty):
-            yield pd.DataFrame({
-                "source": pdf["source"].to_numpy()[empty],
-                "doc_id": pdf["doc_id"].to_numpy()[empty],
-                "n_tok": np.zeros(len(empty), dtype=np.int32),
-                "tokens": pd.Series(
-                    [np.empty(0, dtype=np.int32)] * len(empty),
-                    dtype=object),
-                "rsi": pd.Series(
-                    [np.empty(0, dtype=np.float64)] * len(empty),
-                    dtype=object),
-            })
-
-
-def core_features_long(doc_df: DataFrame,
-                       cfg: FeatureConfig | None = None,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Doc-grain input -> long-form (entity x offset) core features.
-
-    Zero-shuffle by default: ``mapInArrow`` over the scan output, with
-    parallelism from Parquet file splits (bytes ∝ tokens ∝ work).  Pass
-    ``num_partitions`` to force a round-robin repartition first — useful
-    when the input is a few small files (e.g. local benches) whose splits
-    underuse the cluster; at real scale leave it unset.
-
-    Physical path mirrors :func:`features_long` (r6): tokens are read
-    straight from the Arrow list buffers, the kernel outputs are gathered
-    into pooled buffers and wrapped zero-copy — no pandas block
-    consolidation on either side of the boundary.  Values are the same
-    ``core_loop_batched`` outputs the previous mapInPandas path emitted
-    (identical chunking, identical kernel calls).
-    """
-    import pyarrow as pa
-
-    cfg = cfg or FeatureConfig()
-    if num_partitions:
-        doc_df = doc_df.repartition(num_partitions)
-
-    def run(batches):
-        def produce(emit, acquire_pool):
-            import pyarrow.compute as pc
-
-            j = 0
-            for rb in batches:
-                src_col = rb.column(rb.schema.get_field_index("source"))
-                did_col = rb.column(rb.schema.get_field_index("doc_id"))
-                for idx, chunk_flat, lens, mat, fe in _arrow_doc_chunks(rb):
-                    pool = acquire_pool(j)
-                    high, low, close = tokens_to_ohlcv_batched(mat)
-                    out = core_loop_batched(high, low, close,
-                                            cfg.atr_period,
-                                            cfg.adaptive_offset,
-                                            copy_out=False)
-                    rep = pa.array(np.repeat(idx.astype(np.int64), lens))
-                    offsets = np.concatenate(
-                        [np.arange(n, dtype=np.int32) for n in lens])
-                    arrays = [
-                        pc.take(src_col, rep),
-                        pc.take(did_col, rep),
-                        pa.array(offsets),
-                        pa.array(chunk_flat.astype(np.int32, copy=False)),
-                    ]
-                    for k in CORE_OUTPUTS:
-                        buf = pool.get(f"core_{k}", len(fe))
-                        np.take(out[k].ravel(), fe, out=buf)
-                        arrays.append(pa.array(buf))
-                    emit(pa.RecordBatch.from_arrays(
-                        arrays,
-                        ["source", "doc_id", "offset", "token"]
-                        + list(CORE_OUTPUTS)))
-                    j += 1
-
-        yield from _overlap_chunks(produce)
-
-    return doc_df.mapInArrow(run, schema=CORE_LONG_SCHEMA)
-
-
-def core_features_doc(doc_df: DataFrame,
-                      cfg: FeatureConfig | None = None) -> DataFrame:
-    """Doc-grain input -> doc-grain output with the original ``tokens``
-    array passed through bit-exactly plus a per-step ``rsi`` array."""
-    cfg = cfg or FeatureConfig()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield from _kernel_on_docs(pdf, cfg, long_form=False)
-
-    return doc_df.mapInPandas(run, schema=CORE_DOC_SCHEMA)
-
-
-def core_features_from_long(long_df: DataFrame,
-                            cfg: FeatureConfig | None = None,
-                            num_partitions: int | None = None) -> DataFrame:
-    """Long-form input (source, doc_id, offset, token) -> same long-form
-    output as :func:`core_features_long`.
-
-    One shuffle: salted repartition by entity, then grouped-map kernel.
-    The kernel sorts each group by ``offset`` (Spark gives no group-order
-    guarantee — SURVEY §4).
-    """
-    cfg = cfg or FeatureConfig()
-    if num_partitions:
-        long_df = repartition_by_entity(long_df, num_partitions)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("offset", kind="stable")
-        tokens = pdf["token"].to_numpy(dtype=np.int64)[None, :]
-        high, low, close = tokens_to_ohlcv_batched(tokens)
-        out = core_loop_batched(high, low, close,
-                                cfg.atr_period, cfg.adaptive_offset)
-        res = pd.DataFrame({
-            "source": pdf["source"].to_numpy(),
-            "doc_id": pdf["doc_id"].to_numpy(),
-            "offset": pdf["offset"].to_numpy(dtype=np.int32),
-            "token": pdf["token"].to_numpy(dtype=np.int32),
-        })
-        for k in CORE_OUTPUTS:
-            res[k] = out[k][0]
-        return res
-
-    return (long_df.groupBy("source", "doc_id")
-            .applyInPandas(run, schema=CORE_LONG_SCHEMA))
+def _core_cols(mat, lens, cfg: FeatureConfig, pool) -> dict[str, np.ndarray]:
+    """Core recurrence outputs (rsi + intermediates) for one padded
+    chunk, gathered into pooled long-form buffers (docs in chunk
+    order)."""
+    high, low, close = tokens_to_ohlcv_batched(mat)
+    out = core_loop_batched(high, low, close, cfg.atr_period,
+                            cfg.adaptive_offset, copy_out=False)
+    fe = _flat_explode_idx(lens, mat.shape[1])
+    return {k: np.take(out[k].ravel(), fe,
+                       out=pool.get(f"core_{k}", len(fe)))
+            for k in CORE_OUTPUTS}
 
 
 def feature_columns_for(cfg: FeatureConfig) -> list[str]:
@@ -308,36 +137,21 @@ def feature_columns_for(cfg: FeatureConfig) -> list[str]:
     return list(FEATURE_COLUMNS)
 
 
-def features_long_schema(cfg: FeatureConfig) -> str:
-    return ("source string, doc_id string, offset int, token int, "
-            + ", ".join(f"{c} double" for c in feature_columns_for(cfg)))
+def _select_columns(cfg: FeatureConfig,
+                    columns: list[str] | None) -> list[str]:
+    """The config's feature columns, projected to ``columns`` (kept in
+    the config's order); unknown names fail loud."""
+    feat_cols = feature_columns_for(cfg)
+    if columns is None:
+        return feat_cols
+    unknown = sorted(set(columns) - set(feat_cols))
+    if unknown:
+        raise ValueError(f"unknown feature columns: {unknown}")
+    return [c for c in feat_cols if c in set(columns)]
 
 
-def _features_on_docs(pdf: pd.DataFrame, cfg: FeatureConfig,
-                      cell_budget: int = CELL_BUDGET,
-                      ) -> Iterator[pd.DataFrame]:
-    """Full feature pipeline (43 or 169/121 cols) over a doc batch."""
-    if len(pdf) == 0:
-        return
-    _require_no_null_tokens_pandas(pdf)
-    toks = [np.asarray(t, dtype=np.int32) for t in pdf["tokens"]]
-    lengths = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                          count=len(toks))
-    for idx in _length_chunks(lengths, cell_budget):
-        chunk_toks = [toks[i] for i in idx]
-        mat, lens = pad_sequences(chunk_toks, dtype=np.int64)
-        cols = _chunk_feature_cols(mat, lens, cfg)
-        src = pdf["source"].to_numpy()[idx]
-        did = pdf["doc_id"].to_numpy()[idx]
-        offsets = np.concatenate(
-            [np.arange(n, dtype=np.int32) for n in lens])
-        yield pd.DataFrame({
-            "source": np.repeat(src, lens),
-            "doc_id": np.repeat(did, lens),
-            "offset": offsets,
-            "token": np.concatenate(chunk_toks),
-            **cols,
-        })
+def _col(rb, name: str):
+    return rb.column(rb.schema.get_field_index(name))
 
 
 def _arrow_doc_chunks(rb, cell_budget: int = CELL_BUDGET):
@@ -345,22 +159,31 @@ def _arrow_doc_chunks(rb, cell_budget: int = CELL_BUDGET):
     chunks: (doc_row_idx, chunk_flat_tokens, lengths, padded_int64_matrix).
 
     Zero pandas involvement: token values come straight out of the Arrow
-    list buffer; the padded matrix is one vectorized scatter.
+    list buffer; the padded matrix is one vectorized scatter.  A NULL
+    tokens array (empty docs must be [], not NULL) or a NULL token inside
+    one (which NumPy would otherwise turn into a garbage integer) is a
+    contract violation: every job parses its input here, so this is the
+    one place that fails loud with the doc named.
     """
-    import pyarrow.compute as pc
-
-    tokens = rb.column(rb.schema.get_field_index("tokens"))
+    tokens = _col(rb, "tokens")
     if tokens.null_count:
-        dids = rb.column(rb.schema.get_field_index("doc_id"))
         i = pc.index(pc.is_null(tokens), True).as_py()
         raise ValueError(
-            f"null tokens array for doc_id {dids[i].as_py()!r} "
+            f"null tokens array for doc_id {_col(rb, 'doc_id')[i].as_py()!r} "
             f"({tokens.null_count} such rows in this batch); "
             f"empty documents must carry [] not NULL")
     lengths = pc.list_value_length(tokens).to_numpy().astype(np.int64)
-    flat = tokens.flatten().to_numpy(zero_copy_only=False)
+    flat_arr = tokens.flatten()
     starts = np.zeros(len(lengths) + 1, dtype=np.int64)
     np.cumsum(lengths, out=starts[1:])
+    if flat_arr.null_count:
+        k = pc.index(pc.is_null(flat_arr), True).as_py()
+        i = int(np.searchsorted(starts, k, side="right")) - 1
+        raise ValueError(
+            f"null token at offset {k - int(starts[i])} of the tokens "
+            f"array for doc_id {_col(rb, 'doc_id')[i].as_py()!r}; "
+            f"token arrays must not contain NULL")
+    flat = flat_arr.to_numpy(zero_copy_only=False)
     for idx in _length_chunks(lengths, cell_budget):
         lens = lengths[idx]
         gidx = np.concatenate(
@@ -368,9 +191,8 @@ def _arrow_doc_chunks(rb, cell_budget: int = CELL_BUDGET):
         chunk_flat = flat[gidx]
         t_max = int(lens.max()) if len(lens) else 0
         mat = _padded_int_buffer(len(idx), t_max)
-        fe = _flat_explode_idx_local(lens, t_max)
-        mat.ravel()[fe] = chunk_flat
-        yield idx, chunk_flat, lens, mat, fe
+        mat.ravel()[_flat_explode_idx(lens, t_max)] = chunk_flat
+        yield idx, chunk_flat, lens, mat
 
 
 _PAD_INT: dict[str, np.ndarray | None] = {"buf": None}
@@ -385,14 +207,6 @@ def _padded_int_buffer(b: int, t: int) -> np.ndarray:
         buf = _PAD_INT["buf"] = np.empty(max(need, CELL_BUDGET),
                                          dtype=np.int64)
     return buf[:need].reshape(b, t)
-
-
-def _flat_explode_idx_local(lengths: np.ndarray, t: int) -> np.ndarray:
-    from atr_adaptive_laguerre_spark.kernel.multi_interval_batched import (
-        _flat_explode_idx,
-    )
-
-    return _flat_explode_idx(lengths, t)
 
 
 _OVERLAP_DONE = object()
@@ -410,14 +224,16 @@ def _overlap_chunks(produce):
     writes), so running compute on a helper thread overlaps them.
 
     ``produce(emit, acquire_pool)`` runs on the helper thread; it calls
-    ``acquire_pool(j)`` before computing chunk ``j`` (returns one of the
-    TWO persistent OutPools and, for j >= 2, blocks until chunk j-2 —
+    ``acquire_pool(j)`` before building batch ``j`` (returns one of the
+    TWO persistent OutPools and, for j >= 2, blocks until batch j-2 —
     same pool parity — has been fully serialized) and ``emit(batch)``
-    per finished RecordBatch.  The ack protocol is what makes the
+    once per acquired pool.  The ack protocol is what makes the
     zero-copy pooled buffers safe: the worker serializes a yielded
     batch BEFORE resuming the generator, so the consumer's post-yield
-    ack certifies "this chunk's buffers may be overwritten".  Errors
+    ack certifies "this batch's buffers may be overwritten".  Errors
     propagate; generator close (task kill) stops the thread promptly.
+    A producer that has not exited ``_PRODUCER_JOIN_S`` seconds after
+    stop raises ``RuntimeError`` naming the thread.
     """
     import queue
     import threading
@@ -482,10 +298,136 @@ def _overlap_chunks(produce):
         # Block until the producer actually exits: Spark reuses this
         # worker process for the NEXT task, and a producer still inside
         # a kernel chunk would race that task's use of the shared
-        # Workspace/_PAD_INT buffers.  Bounded wait: the producer
-        # notices `stop` at its next emit/acquire poll (<= ~1 s past
-        # the current chunk's compute).
-        t.join(timeout=60.0)
+        # Workspace/_PAD_INT buffers.  The producer notices `stop` at
+        # its next emit/acquire poll (<= ~1 s past the current chunk's
+        # compute); one that does not is a fault, not a slow exit.
+        t.join(timeout=_PRODUCER_JOIN_S)
+        if t.is_alive():
+            raise RuntimeError(
+                f"producer thread {t.name!r} still running "
+                f"{_PRODUCER_JOIN_S:g} s after stop; refusing to hand "
+                f"its shared kernel buffers to the next task")
+
+
+def _emit_long(rb, idx, tokens, lens, cols, names):
+    """One row per (entity, offset); tokens pass through unchanged."""
+    rep = pa.array(np.repeat(idx.astype(np.int64), lens))
+    offsets = np.concatenate([np.arange(n, dtype=np.int32) for n in lens])
+    arrays = [
+        pc.take(_col(rb, "source"), rep),
+        pc.take(_col(rb, "doc_id"), rep),
+        pa.array(offsets),
+        pa.array(tokens.astype(np.int32, copy=False)),
+    ]
+    arrays += [pa.array(cols[c]) for c in names]
+    return pa.RecordBatch.from_arrays(
+        arrays, ["source", "doc_id", "offset", "token"] + names)
+
+
+def _emit_doc(rb, idx, tokens, lens, cols, names):
+    """One row per entity; the tokens array and every feature are list
+    columns assembled zero-copy over the chunk's offsets."""
+    offs = np.zeros(len(lens) + 1, dtype=np.int32)
+    np.cumsum(lens, out=offs[1:])
+    pa_offs = pa.array(offs)
+    take_idx = pa.array(idx.astype(np.int64))
+    arrays = [
+        pc.take(_col(rb, "source"), take_idx),
+        pc.take(_col(rb, "doc_id"), take_idx),
+        pa.array(lens.astype(np.int32)),
+        pa.ListArray.from_arrays(
+            pa_offs, pa.array(tokens.astype(np.int32, copy=False))),
+    ]
+    arrays += [pa.ListArray.from_arrays(pa_offs, pa.array(cols[c]))
+               for c in names]
+    return pa.RecordBatch.from_arrays(
+        arrays, ["source", "doc_id", "n_tok", "tokens"] + names)
+
+
+def _emit_empty_docs(rb, names):
+    """The doc grain contracts ONE row per entity, but the chunker skips
+    n_tok == 0 entities (no long-form rows): emit them with empty arrays
+    so they don't silently vanish.  None when the batch has none."""
+    lens = pc.list_value_length(_col(rb, "tokens")).to_numpy()
+    empty = np.flatnonzero(lens == 0)
+    if not len(empty):
+        return None
+    none = np.empty(0, dtype=np.float64)
+    return _emit_doc(rb, empty, np.empty(0, dtype=np.int32),
+                     np.zeros(len(empty), dtype=np.int64),
+                     {c: none for c in names}, names)
+
+
+def _emit_checksum(rb, idx, tokens, lens, cols, names):
+    """Per-chunk row count, NaN count and per-column ``nansum``."""
+    n_nan = sum(int(np.isnan(cols[c]).sum()) for c in names)
+    arrays = [pa.array([int(lens.sum())], pa.int64()),
+              pa.array([n_nan], pa.int64())]
+    arrays += [pa.array([float(np.nansum(cols[c]))]) for c in names]
+    return pa.RecordBatch.from_arrays(
+        arrays, ["n_rows", "n_nan"] + [f"{c}_sum" for c in names])
+
+
+#: output shape -> (chunk emitter, per-batch tail emitter or None,
+#: leading schema, per-column schema template)
+_SHAPES = {
+    "long": (_emit_long, None,
+             "source string, doc_id string, offset int, token int",
+             "{} double"),
+    "doc": (_emit_doc, _emit_empty_docs,
+            "source string, doc_id string, n_tok int, tokens array<int>",
+            "{} array<double>"),
+    "checksum": (_emit_checksum, None, "n_rows long, n_nan long",
+                 "{}_sum double"),
+}
+
+
+def _map_kernel(doc_df: DataFrame, shape: str, compute, cfg: FeatureConfig,
+                names: list[str], num_partitions: int | None = None,
+                cell_budget: int = CELL_BUDGET) -> DataFrame:
+    """The one kernel driver: doc-grain Arrow batches -> chunks ->
+    ``compute(mat, lens, cfg, pool)`` (a dict of long-form columns) ->
+    the ``shape`` emitter -> ``_overlap_chunks`` -> ``mapInArrow``.
+
+    ``num_partitions`` forces a round-robin repartition first — useful
+    when the input is a few small files whose splits underuse the
+    cluster; at real scale leave it unset (zero shuffle)."""
+    emit_chunk, emit_tail, keys, col_type = _SHAPES[shape]
+    if num_partitions:
+        doc_df = doc_df.repartition(num_partitions)
+    schema = ", ".join([keys] + [col_type.format(c) for c in names])
+
+    def run(batches):
+        def produce(emit, acquire_pool):
+            j = 0
+            for rb in batches:
+                for idx, tokens, lens, mat in _arrow_doc_chunks(
+                        rb, cell_budget):
+                    cols = compute(mat, lens, cfg, acquire_pool(j))
+                    emit(emit_chunk(rb, idx, tokens, lens, cols, names))
+                    j += 1
+                tail = emit_tail(rb, names) if emit_tail else None
+                if tail is not None:
+                    acquire_pool(j)     # one ack per emitted batch
+                    emit(tail)
+                    j += 1
+
+        yield from _overlap_chunks(produce)
+
+    return doc_df.mapInArrow(run, schema=schema)
+
+
+def core_features_long(doc_df: DataFrame,
+                       cfg: FeatureConfig | None = None,
+                       num_partitions: int | None = None) -> DataFrame:
+    """Doc-grain input -> long-form (entity x offset) core features
+    (``rsi`` plus the recurrence intermediates in ``CORE_OUTPUTS``).
+
+    Zero-shuffle by default; ``num_partitions`` forces a round-robin
+    repartition first (see :func:`_map_kernel`)."""
+    cfg = cfg or FeatureConfig()
+    return _map_kernel(doc_df, "long", _core_cols, cfg, list(CORE_OUTPUTS),
+                       num_partitions)
 
 
 def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
@@ -499,11 +441,6 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     Arrow kernel, mirroring the reference's in-process fusion).  Zero
     shuffle unless ``num_partitions`` forces a spread.
 
-    Physical path: ``mapInArrow`` — token values are read straight from
-    the Arrow list buffers and every output column is built zero-copy
-    from the kernel's NumPy arrays (no pandas block consolidation, which
-    would copy the whole 121-column matrix once more).
-
     ``columns`` projects the OUTPUT at the worker: Catalyst cannot push
     a projection through a Python map node, so a downstream select still
     pays Arrow transfer + row conversion for all 121 columns — the
@@ -512,56 +449,10 @@ def features_long(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     needed subset here keeps the kernel fused (it computes everything;
     compute is cheap) but ships only the requested features.
     """
-    import pyarrow as pa
-
     cfg = cfg or FeatureConfig()
-    if num_partitions:
-        doc_df = doc_df.repartition(num_partitions)
-    feat_cols = feature_columns_for(cfg)
-    if columns is not None:
-        unknown = sorted(set(columns) - set(feat_cols))
-        if unknown:
-            raise ValueError(f"unknown feature columns: {unknown}")
-        feat_cols = [c for c in feat_cols if c in set(columns)]
-    schema = ("source string, doc_id string, offset int, token int, "
-              + ", ".join(f"{c} double" for c in feat_cols))
-
-    def run(batches):
-        def produce(emit, acquire_pool):
-            import pyarrow.compute as pc
-
-            j = 0
-            for rb in batches:
-                src_col = rb.column(rb.schema.get_field_index("source"))
-                did_col = rb.column(rb.schema.get_field_index("doc_id"))
-                for idx, chunk_flat, lens, mat, _fe in _arrow_doc_chunks(
-                        rb, cell_budget):
-                    pool = acquire_pool(j)
-                    cols = _chunk_feature_cols(mat, lens, cfg, pool=pool)
-                    rep = pa.array(np.repeat(idx.astype(np.int64), lens))
-                    offsets = np.concatenate(
-                        [np.arange(n, dtype=np.int32) for n in lens])
-                    arrays = [
-                        pc.take(src_col, rep),
-                        pc.take(did_col, rep),
-                        pa.array(offsets),
-                        pa.array(chunk_flat.astype(np.int32, copy=False)),
-                    ]
-                    arrays += [pa.array(cols[c]) for c in feat_cols]
-                    emit(pa.RecordBatch.from_arrays(
-                        arrays,
-                        ["source", "doc_id", "offset", "token"]
-                        + feat_cols))
-                    j += 1
-
-        yield from _overlap_chunks(produce)
-
-    return doc_df.mapInArrow(run, schema=schema)
-
-
-def features_doc_schema(cfg: FeatureConfig) -> str:
-    return ("source string, doc_id string, n_tok int, tokens array<int>, "
-            + ", ".join(f"{c} array<double>" for c in feature_columns_for(cfg)))
+    return _map_kernel(doc_df, "long", _chunk_feature_cols, cfg,
+                       _select_columns(cfg, columns), num_partitions,
+                       cell_budget)
 
 
 def features_doc(doc_df: DataFrame, cfg: FeatureConfig | None = None,
@@ -570,83 +461,17 @@ def features_doc(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     """Doc-grain input -> doc-grain output: one row per entity carrying
     the original ``tokens`` array (bit-exact pass-through) plus each
     feature as an ``array<double>`` aligned to the token positions.
+    Empty docs get one row with empty arrays.
 
     Same information as :func:`features_long` at ~1/500th the row count:
     the per-row JVM ingest cost (columnar->row conversion, row accounting)
     collapses, which matters when the 121-column matrix is the dominant
-    byte stream.  List columns are assembled zero-copy from the kernel's
-    pooled 1-D outputs (ListArray.from_arrays over the chunk offsets).
-
-    ``columns`` worker-projects the output exactly like
-    :func:`features_long` (Catalyst cannot prune through the Python map
-    node; the kernel stays fused, only requested features ship).
+    byte stream.  ``columns`` worker-projects the output exactly like
+    :func:`features_long`.
     """
-    import pyarrow as pa
-
     cfg = cfg or FeatureConfig()
-    if num_partitions:
-        doc_df = doc_df.repartition(num_partitions)
-    feat_cols = feature_columns_for(cfg)
-    if columns is not None:
-        unknown = sorted(set(columns) - set(feat_cols))
-        if unknown:
-            raise ValueError(f"unknown feature columns: {unknown}")
-        feat_cols = [c for c in feat_cols if c in set(columns)]
-    schema = ("source string, doc_id string, n_tok int, tokens array<int>, "
-              + ", ".join(f"{c} array<double>" for c in feat_cols))
-
-    def run(batches):
-        import pyarrow.compute as pc
-
-        from atr_adaptive_laguerre_spark.kernel.batched import get_out_pool
-
-        pool = get_out_pool()
-        for rb in batches:
-            src_col = rb.column(rb.schema.get_field_index("source"))
-            did_col = rb.column(rb.schema.get_field_index("doc_id"))
-            for idx, chunk_flat, lens, mat, _fe in _arrow_doc_chunks(rb):
-                cols = _chunk_feature_cols(mat, lens, cfg, pool=pool)
-                offs = np.zeros(len(lens) + 1, dtype=np.int32)
-                np.cumsum(lens, out=offs[1:])
-                pa_offs = pa.array(offs)
-                take_idx = pa.array(idx.astype(np.int64))
-                arrays = [
-                    pc.take(src_col, take_idx),
-                    pc.take(did_col, take_idx),
-                    pa.array(lens.astype(np.int32)),
-                    pa.ListArray.from_arrays(
-                        pa_offs,
-                        pa.array(chunk_flat.astype(np.int32, copy=False))),
-                ]
-                arrays += [pa.ListArray.from_arrays(pa_offs, pa.array(cols[c]))
-                           for c in feat_cols]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, ["source", "doc_id", "n_tok", "tokens"]
-                    + feat_cols)
-            # n_tok==0 entities are skipped by the chunker (no long-form
-            # rows) but the doc grain contracts ONE row per entity —
-            # emit them with empty arrays
-            tok_col = rb.column(rb.schema.get_field_index("tokens"))
-            all_lens = pc.list_value_length(tok_col).to_numpy()
-            empty = np.flatnonzero(all_lens == 0)
-            if len(empty):
-                z_offs = pa.array(np.zeros(len(empty) + 1, dtype=np.int32))
-                take_idx = pa.array(empty.astype(np.int64))
-                arrays = [
-                    pc.take(src_col, take_idx),
-                    pc.take(did_col, take_idx),
-                    pa.array(np.zeros(len(empty), dtype=np.int32)),
-                    pa.ListArray.from_arrays(
-                        z_offs, pa.array(np.empty(0, dtype=np.int32))),
-                ]
-                arrays += [pa.ListArray.from_arrays(
-                    z_offs, pa.array(np.empty(0, dtype=np.float64)))
-                    for _ in feat_cols]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, ["source", "doc_id", "n_tok", "tokens"]
-                    + feat_cols)
-
-    return doc_df.mapInArrow(run, schema=schema)
+    return _map_kernel(doc_df, "doc", _chunk_feature_cols, cfg,
+                       _select_columns(cfg, columns), num_partitions)
 
 
 def features_checksum(doc_df: DataFrame, cfg: FeatureConfig | None = None,
@@ -668,100 +493,54 @@ def features_checksum(doc_df: DataFrame, cfg: FeatureConfig | None = None,
     ``agg(sum(n_nan))`` must equal the isnan-count over
     :func:`features_long` (tested on a corpus with short docs).
     """
-    import pyarrow as pa
-
     cfg = cfg or FeatureConfig()
-    if num_partitions:
-        doc_df = doc_df.repartition(num_partitions)
-    feat_cols = feature_columns_for(cfg)
-    schema = ("n_rows long, n_nan long, " +
-              ", ".join(f"{c}_sum double" for c in feat_cols))
-
-    def run(batches):
-        from atr_adaptive_laguerre_spark.kernel.batched import get_out_pool
-
-        pool = get_out_pool()
-        for rb in batches:
-            for idx, chunk_flat, lens, mat, _fe in _arrow_doc_chunks(rb):
-                cols = _chunk_feature_cols(mat, lens, cfg, pool=pool)
-                n_nan = sum(int(np.isnan(cols[c]).sum())
-                            for c in feat_cols)
-                arrays = [pa.array([int(lens.sum())], pa.int64()),
-                          pa.array([n_nan], pa.int64())]
-                arrays += [pa.array([float(np.nansum(cols[c]))])
-                           for c in feat_cols]
-                yield pa.RecordBatch.from_arrays(
-                    arrays,
-                    ["n_rows", "n_nan"] + [f"{c}_sum" for c in feat_cols])
-
-    return doc_df.mapInArrow(run, schema=schema)
-
-
-def core_features_from_long_sorted(long_df: DataFrame,
-                                   cfg: FeatureConfig | None = None,
-                                   num_partitions: int = 32) -> DataFrame:
-    """Long-form input -> long-form core features via the
-    **partition-sorted batched** path: salted ``repartitionByRange`` on
-    the entity key, ``sortWithinPartitions(entity, offset)``, then ONE
-    ``mapInPandas`` over each whole partition that slices consecutive
-    entities and runs them through the *batched* kernel together.
-
-    Compared to ``core_features_from_long`` (grouped applyInPandas, one
-    kernel call per entity), this amortizes the kernel across all
-    entities of a partition — the physical plan the north rule describes
-    (range-partition + salt, per-entity sequential math inside a
-    vectorized Arrow kernel).  Entities are never split: the sort makes
-    them contiguous, and rows of the partition's final entity are held
-    back until the batch iterator is exhausted.
-    """
-    from atr_adaptive_laguerre_spark.engine.partitioning import (
-        salted_entity_key,
-    )
-
-    cfg = cfg or FeatureConfig()
-    keyed = salted_entity_key(long_df)
-    part = (keyed.repartitionByRange(num_partitions, "_ekey")
-            .sortWithinPartitions("_ekey", "offset"))
-
-    def process_group(chunk: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        # chunk holds >=1 complete entities, sorted by (_ekey, offset)
-        ek = chunk["_ekey"].to_numpy()
-        bounds = np.flatnonzero(np.concatenate(([True], ek[1:] != ek[:-1])))
-        bounds = np.append(bounds, len(ek))
-        tok_all = chunk["token"].to_numpy(dtype=np.int32)  # ONE conversion
-        toks = [tok_all[bounds[i]:bounds[i + 1]]
-                for i in range(len(bounds) - 1)]
-        sub = chunk.iloc[bounds[:-1]]
-        pdf = pd.DataFrame({
-            "tokens": pd.Series(list(toks), dtype=object),
-            "source": sub["source"].to_numpy(),
-            "doc_id": sub["doc_id"].to_numpy(),
-        })
-        yield from _kernel_on_docs(pdf, cfg, long_form=True)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        held: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if held is not None:
-                pdf = pd.concat([held, pdf], ignore_index=True)
-            ek = pdf["_ekey"].to_numpy()
-            last_key = ek[-1]
-            cut = np.searchsorted(ek, last_key, side="left")
-            if cut > 0:
-                yield from process_group(pdf.iloc[:cut])
-            held = pdf.iloc[cut:]
-        if held is not None and len(held):
-            yield from process_group(held)
-
-    return part.mapInPandas(run, schema=CORE_LONG_SCHEMA)
+    return _map_kernel(doc_df, "checksum", _chunk_feature_cols, cfg,
+                       feature_columns_for(cfg), num_partitions)
 
 
 def explode_tokens(doc_df: DataFrame) -> DataFrame:
-    """Doc-grain -> long-form via posexplode (Spark-native, no Python)."""
-    from pyspark.sql import functions as F
+    """Doc-grain -> long-form via posexplode (Spark-native, no Python).
 
+    An empty array has no long-form rows.  A NULL array (a contract
+    violation) becomes one row with a NULL token instead of vanishing,
+    so the kernel's null check still names the doc after
+    :func:`implode_tokens`."""
+    tokens = F.coalesce(F.col("tokens"), F.array(F.lit(None)))
     return doc_df.select(
         "source", "doc_id",
-        F.posexplode("tokens").alias("offset", "token"))
+        F.posexplode(tokens).alias("offset", "token"))
+
+
+def implode_tokens(long_df: DataFrame,
+                   num_partitions: int | None = None) -> DataFrame:
+    """Long-form (source, doc_id, offset, token) -> doc-grain
+    (source, doc_id, n_tok, tokens): the inverse of
+    :func:`explode_tokens`, Catalyst-only.
+
+    Rows are range-partitioned on the salted entity key ``_ekey``
+    (``partitioning.salted_entity_key``), so entities stay whole and
+    key-space locality cannot skew the ranges; the ``groupBy`` on
+    (_ekey, source, doc_id) is already satisfied by that partitioning,
+    so the plan has exactly one Exchange.  Tokens are ordered by
+    ``offset`` inside each group (Spark gives no group-order guarantee),
+    and an entity whose offsets are not exactly 0..n-1 (a gap, a
+    duplicate, a NULL) fails the query with the entity named.
+    Compose as ``core_features_long(implode_tokens(long_df))``.
+    """
+    keyed = salted_entity_key(long_df)
+    parts = (keyed.repartitionByRange(num_partitions, "_ekey")
+             if num_partitions else keyed.repartitionByRange("_ekey"))
+    grouped = (parts.groupBy("_ekey", "source", "doc_id")
+               .agg(F.sort_array(F.collect_list(F.struct("offset", "token")))
+                    .alias("seq")))
+    dense = F.forall(
+        F.transform(F.col("seq.offset"), lambda o, i: o.eqNullSafe(i)),
+        lambda ok: ok)
+    bad = F.raise_error(F.concat(
+        F.lit("offsets of entity (source="), F.col("source"),
+        F.lit(", doc_id="), F.col("doc_id"),
+        F.lit(") are not exactly 0..n-1")))
+    return grouped.select(
+        "source", "doc_id",
+        F.size("seq").alias("n_tok"),
+        F.when(dense, F.col("seq.token")).otherwise(bad).alias("tokens"))

@@ -29,4 +29,26 @@ def corpus_parquet(tmp_path_factory):
     return path
 
 
+@pytest.fixture(scope="session")
+def kernel_entry_points():
+    """Every batch feature job as (name, output shape, doc_df -> DataFrame),
+    for contract tests that must hold on all of them alike."""
+    from atr_adaptive_laguerre_spark.config import FeatureConfig
+    from atr_adaptive_laguerre_spark.engine.features_job import (
+        core_features_long, explode_tokens, features_checksum, features_doc,
+        features_long, implode_tokens,
+    )
+
+    cfg = FeatureConfig(atr_period=14)
+    return [
+        ("core_features_long", "long", lambda d: core_features_long(d, cfg)),
+        ("features_long", "long", lambda d: features_long(d, cfg)),
+        ("features_doc", "doc", lambda d: features_doc(d, cfg)),
+        ("features_checksum", "checksum",
+         lambda d: features_checksum(d, cfg)),
+        ("implode", "long", lambda d: core_features_long(
+            implode_tokens(explode_tokens(d)), cfg)),
+    ]
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")

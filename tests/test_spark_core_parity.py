@@ -1,10 +1,11 @@
 """Spark pipeline == local oracle, token round-trip, and path equivalence.
 
-This is the distributed-correctness gate for M1: the mapInPandas scan path,
-the salted applyInPandas shuffle path, and the local single-process oracle
-must all agree bit-for-bit at every entity x offset, and the ``tokens``
-array<int32> must survive the pipeline exactly (BASELINE.json input_hint
-per-row invariant).
+This is the distributed-correctness gate for M1: the zero-shuffle
+doc-grain scan path, the long-form path (salted range-partitioned
+``implode_tokens`` feeding the same kernel driver), and the local
+single-process oracle must all agree bit-for-bit at every entity x
+offset, and the ``tokens`` array<int32> must survive the pipeline exactly
+(BASELINE.json input_hint per-row invariant).
 """
 
 import numpy as np
@@ -14,8 +15,7 @@ import pytest
 from atr_adaptive_laguerre_spark.config import FeatureConfig
 from atr_adaptive_laguerre_spark.data.corpus import make_corpus, tokens_to_ohlcv
 from atr_adaptive_laguerre_spark.engine.features_job import (
-    core_features_doc, core_features_from_long, core_features_long,
-    explode_tokens,
+    core_features_long, explode_tokens, features_doc, implode_tokens,
 )
 from atr_adaptive_laguerre_spark.kernel.reference_impl import (
     CORE_OUTPUTS, core_loop,
@@ -83,19 +83,24 @@ def test_scan_path_matches_oracle(spark, small_rows):
 
 
 def test_shuffle_path_matches_scan_path(spark, doc_df):
+    """Long-form input through the one shuffle (salted range partition +
+    ``implode_tokens``) equals the zero-shuffle scan path bit-for-bit,
+    including when partitions hold many entities and Spark's default
+    partition count decides the ranges."""
     long_in = explode_tokens(doc_df)
-    got_shuffle = _collect_sorted(
-        core_features_from_long(long_in, CFG, num_partitions=8))
     got_scan = _collect_sorted(core_features_long(doc_df, CFG))
-    assert len(got_shuffle) == len(got_scan) > 0
-    for k in ("token", *CORE_OUTPUTS):
-        np.testing.assert_array_equal(
-            got_shuffle[k].to_numpy(), got_scan[k].to_numpy(), err_msg=k)
+    for n in (5, None):
+        got = _collect_sorted(
+            core_features_long(implode_tokens(long_in, n), CFG))
+        assert len(got) == len(got_scan) > 0
+        for k in ("source", "doc_id", "offset", "token", *CORE_OUTPUTS):
+            np.testing.assert_array_equal(
+                got[k].to_numpy(), got_scan[k].to_numpy(), err_msg=k)
 
 
 def test_token_array_round_trip_exact(spark, doc_df):
     """input_hint invariant: tokens array<int32> survives per row, exactly."""
-    out = core_features_doc(doc_df, CFG).toPandas().set_index("doc_id")
+    out = features_doc(doc_df, CFG).toPandas().set_index("doc_id")
     src = doc_df.select("doc_id", "tokens", "n_tok").toPandas().set_index("doc_id")
     assert set(out.index) == set(src.index)
     for doc_id, row in src.iterrows():
@@ -124,21 +129,30 @@ def test_long_form_reassembles_to_original_tokens(spark, doc_df):
             np.asarray(want.loc[doc_id, "tokens"], dtype=np.int64))
 
 
-def test_scan_path_has_no_shuffle(spark, doc_df):
-    plan = core_features_long(doc_df, CFG)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, f"unexpected shuffle in scan path:\n{plan}"
+def test_scan_path_has_no_shuffle(spark, doc_df, kernel_entry_points):
+    """Every batch feature job is ONE mapInArrow (no pandas UDF node);
+    the doc-grain scan has no Exchange, the long-form path exactly one."""
+    for name, _shape, job in kernel_entry_points:
+        plan = job(doc_df)._jdf.queryExecution().executedPlan().toString()
+        nodes = [ln.lstrip(" :-+*()0123456789") for ln in plan.splitlines()]
+        assert sum(n.startswith("MapInArrow") for n in nodes) == 1, \
+            (name, plan)
+        assert "MapInPandas" not in plan, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+        want = 1 if name == "implode" else 0
+        assert sum(n.startswith("Exchange") for n in nodes) == want, \
+            (name, plan)
 
 
-def test_partition_sorted_path_matches_scan_path(spark, doc_df):
-    from atr_adaptive_laguerre_spark.engine.features_job import (
-        core_features_from_long_sorted,
-    )
-
-    long_in = explode_tokens(doc_df)
-    got = _collect_sorted(
-        core_features_from_long_sorted(long_in, CFG, num_partitions=5))
-    want = _collect_sorted(core_features_long(doc_df, CFG))
-    assert len(got) == len(want) > 0
-    for k in ("token", *CORE_OUTPUTS):
-        np.testing.assert_array_equal(
-            got[k].to_numpy(), want[k].to_numpy(), err_msg=k)
+@pytest.mark.parametrize("offsets", [[0, 1, 3], [0, 1, 1, 2]],
+                         ids=["gap", "duplicate"])
+def test_implode_tokens_rejects_bad_offsets(spark, offsets):
+    """An entity's offsets must be exactly 0..n-1: a gap or a duplicate
+    fails the query with the entity named instead of silently shifting
+    every later bar of the recurrence."""
+    rows = [("s0", "good", i, 100 + i) for i in range(4)]
+    rows += [("s0", "broken", o, 200 + j) for j, o in enumerate(offsets)]
+    long_df = spark.createDataFrame(
+        rows, "source string, doc_id string, offset int, token int")
+    with pytest.raises(Exception, match="broken.*not exactly 0..n-1"):
+        implode_tokens(long_df).collect()

@@ -20,12 +20,23 @@ def doc_df(spark, corpus_parquet):
 
 
 def _local_expected(doc_pdf, cfg):
-    from atr_adaptive_laguerre_spark.data.corpus import tokens_to_ohlcv_batched
+    """Long-form expectation from applying the job's own chunk function,
+    ``_chunk_feature_cols``, to each doc on its own (a (1, n) chunk with
+    fresh output arrays) — Spark's result must equal local application
+    of the same function, whatever chunking the job chose."""
     from atr_adaptive_laguerre_spark.engine.features_job import (
-        _features_on_docs,
+        _chunk_feature_cols,
     )
 
-    return (pd.concat(list(_features_on_docs(doc_pdf, cfg)))
+    frames = []
+    for r in doc_pdf.itertuples(index=False):
+        toks = np.asarray(r.tokens, dtype=np.int64)
+        n = len(toks)
+        cols = _chunk_feature_cols(toks[None, :], np.array([n]), cfg)
+        frames.append(pd.DataFrame({
+            "source": r.source, "doc_id": r.doc_id,
+            "offset": np.arange(n), "token": toks, **cols}))
+    return (pd.concat(frames)
             .sort_values(["source", "doc_id", "offset"])
             .reset_index(drop=True))
 
@@ -268,60 +279,83 @@ def test_features_doc_column_projection(spark, doc_df):
         assert ok.all(), i
 
 
-def test_empty_token_docs_are_skipped(spark):
+def test_empty_token_docs_are_skipped(spark, kernel_entry_points):
     """Zero-length sequences produce no feature rows and must not crash
     the chunker (a (B, 0) padded matrix would be unindexable); mixing
-    many empty docs with real ones leaves the real rows bit-intact."""
-    import pandas as pd
+    many empty docs with real ones leaves the real rows bit-intact.  On
+    every job: no long-form rows, exactly one doc-grain row each (with
+    empty arrays — ADVICE r2), and no share of the checksum's n_rows."""
+    from pyspark.sql import functions as F
 
     rows = [("s0", f"e{i}", [], 0) for i in range(40)]
     rows += [("s0", f"r{i}", list(range(1, 60 + i)), 59 + i)
              for i in range(3)]
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["source", "doc_id", "tokens", "n_tok"]))
-    out = features_long(df, CFG43).toPandas()
-    assert len(out) == sum(59 + i for i in range(3))
-    assert set(out["doc_id"]) == {"r0", "r1", "r2"}
-
-    from atr_adaptive_laguerre_spark.engine.features_job import (
-        core_features_doc, core_features_long,
-    )
-
-    core = core_features_long(df, FeatureConfig(atr_period=14)).toPandas()
-    assert len(core) == sum(59 + i for i in range(3))
-
-    # doc grain contracts ONE row per entity: empty docs must appear
-    # with empty arrays, not silently vanish (ADVICE r2)
-    doc_out = features_doc(df, CFG43).toPandas()
-    assert len(doc_out) == 43
-    empties = doc_out[doc_out["n_tok"] == 0]
-    assert len(empties) == 40
-    assert all(len(t) == 0 for t in empties["tokens"])
-    assert all(len(v) == 0 for v in empties["rsi"])
-
-    core_doc = core_features_doc(df, FeatureConfig(atr_period=14)).toPandas()
-    assert len(core_doc) == 43
-    assert (core_doc["n_tok"] == 0).sum() == 40
+    n_real = sum(59 + i for i in range(3))
+    for name, shape, job in kernel_entry_points:
+        out = job(df)
+        if shape == "long":
+            pdf = out.toPandas()
+            assert len(pdf) == n_real, name
+            assert set(pdf["doc_id"]) == {"r0", "r1", "r2"}, name
+        elif shape == "doc":
+            pdf = out.toPandas()
+            assert len(pdf) == 43, name
+            empties = pdf[pdf["n_tok"] == 0]
+            assert sorted(empties["doc_id"]) == sorted(
+                f"e{i}" for i in range(40)), name
+            assert all(len(t) == 0 for t in empties["tokens"]), name
+            assert all(len(v) == 0 for v in empties["rsi"]), name
+        else:
+            assert out.agg(F.sum("n_rows")).first()[0] == n_real, name
 
 
-def test_null_tokens_fail_loud(spark):
-    """A NULL tokens array (vs []) is a contract violation: both kernel
-    paths must raise a named ValueError, not an opaque numpy conversion
-    error deep in the worker."""
-    import pandas as pd
-    import pytest
-
-    from atr_adaptive_laguerre_spark.engine.features_job import (
-        core_features_long,
-    )
-
+def test_null_tokens_fail_loud(spark, kernel_entry_points):
+    """A NULL tokens array (vs []) is a contract violation: every job
+    must raise the named ValueError, not an opaque numpy conversion
+    error deep in the worker (the long-form path carries the NULL to
+    the same check as a NULL token)."""
     df = spark.createDataFrame(pd.DataFrame({
         "source": ["s0", "s0"], "doc_id": ["ok", "badnull"],
         "tokens": [[1, 2, 3] * 20, None], "n_tok": [60, 0]}))
-    with pytest.raises(Exception, match="null tokens array.*badnull"):
-        features_long(df, CFG43).toPandas()
-    with pytest.raises(Exception, match="null tokens array.*badnull"):
-        core_features_long(df, FeatureConfig(atr_period=14)).toPandas()
+    for name, _shape, job in kernel_entry_points:
+        try:
+            job(df).collect()
+        except Exception as e:  # noqa: BLE001 — surfaces as a JVM error
+            assert "ValueError: null token" in str(e), (name, e)
+            assert "badnull" in str(e), (name, e)
+        else:
+            pytest.fail(f"{name}: a NULL tokens array did not fail")
+
+
+def test_overlap_producer_ignoring_stop_raises(monkeypatch):
+    """A producer thread still alive after the bounded join would race
+    the reused worker's next task on the shared kernel buffers: closing
+    the generator must raise a RuntimeError naming the thread, not
+    return normally."""
+    import threading
+
+    from atr_adaptive_laguerre_spark.engine import features_job
+
+    monkeypatch.setattr(features_job, "_PRODUCER_JOIN_S", 0.2)
+    release = threading.Event()
+
+    def produce(emit, acquire_pool):
+        emit("first")
+        release.wait(30.0)          # ignores stop
+
+    gen = features_job._overlap_chunks(produce)
+    assert next(gen) == "first"
+    producer = next(t for t in threading.enumerate()
+                    if t.name == "kernel-compute-overlap")
+    try:
+        with pytest.raises(RuntimeError, match="kernel-compute-overlap"):
+            gen.close()
+    finally:
+        release.set()
+        producer.join(timeout=10.0)
+    assert not producer.is_alive()
 
 
 def test_overlapped_kernel_paths_survive_partial_consumption(spark, tmp_path):

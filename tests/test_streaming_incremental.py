@@ -132,9 +132,8 @@ def test_entity121_stream_second_config_parity():
 
 
 def test_entity121_stream_state_is_bounded():
-    """The whole point vs the recompute variant: packed state size must
-    NOT grow with stream length (O(1) in bars; the recompute variant's
-    grows linearly)."""
+    """Packed state size must NOT grow with stream length (O(1) in
+    bars; a full-history recompute design's would grow linearly)."""
     from atr_adaptive_laguerre_spark.streaming.multi_interval_incremental import (
         Entity121Stream,
     )
@@ -203,8 +202,8 @@ def test_entity121_pack_roundtrip_mid_stream():
 def test_stream_121_incremental_matches_batch_spark(spark, tmp_path):
     """End-to-end through applyInPandasWithState: 3 file drops, a
     checkpoint restart, replay overlap deduped; emitted rows equal the
-    batch kernel bit-for-bit (the incremental twin of
-    test_stream_121_availability_matches_batch)."""
+    batch kernel bit-for-bit, with rows emitted exactly up to the
+    emission horizon."""
     from atr_adaptive_laguerre_spark.engine.features_job import (
         feature_columns_for,
     )
