@@ -82,20 +82,21 @@ def test_scan_path_matches_oracle(spark, small_rows):
             got[k].to_numpy(), want[k].to_numpy(), err_msg=k)
 
 
-def test_shuffle_path_matches_scan_path(spark, doc_df):
+def _assert_implode_path_matches_scan(doc_df, num_partitions):
     """Long-form input through the one shuffle (salted range partition +
-    ``implode_tokens``) equals the zero-shuffle scan path bit-for-bit,
-    including when partitions hold many entities and Spark's default
-    partition count decides the ranges."""
-    long_in = explode_tokens(doc_df)
+    ``implode_tokens``) equals the zero-shuffle scan path bit-for-bit."""
     got_scan = _collect_sorted(core_features_long(doc_df, CFG))
-    for n in (5, None):
-        got = _collect_sorted(
-            core_features_long(implode_tokens(long_in, n), CFG))
-        assert len(got) == len(got_scan) > 0
-        for k in ("source", "doc_id", "offset", "token", *CORE_OUTPUTS):
-            np.testing.assert_array_equal(
-                got[k].to_numpy(), got_scan[k].to_numpy(), err_msg=k)
+    got = _collect_sorted(core_features_long(
+        implode_tokens(explode_tokens(doc_df), num_partitions), CFG))
+    assert len(got) == len(got_scan) > 0
+    for k in ("source", "doc_id", "offset", "token", *CORE_OUTPUTS):
+        np.testing.assert_array_equal(
+            got[k].to_numpy(), got_scan[k].to_numpy(), err_msg=k)
+
+
+def test_shuffle_path_matches_scan_path(spark, doc_df):
+    """Spark's default partition count decides the ranges."""
+    _assert_implode_path_matches_scan(doc_df, None)
 
 
 def test_token_array_round_trip_exact(spark, doc_df):
@@ -156,3 +157,9 @@ def test_implode_tokens_rejects_bad_offsets(spark, offsets):
         rows, "source string, doc_id string, offset int, token int")
     with pytest.raises(Exception, match="broken.*not exactly 0..n-1"):
         implode_tokens(long_df).collect()
+
+
+def test_partition_sorted_path_matches_scan_path(spark, doc_df):
+    """Few range partitions, so each holds many entities sorted by key:
+    every entity's bars still reach the kernel whole and in order."""
+    _assert_implode_path_matches_scan(doc_df, 5)
